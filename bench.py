@@ -418,10 +418,16 @@ def main() -> None:
     # 349-query record — the set-equality merge check can't merge a
     # subset, so it overwrote): the durable file is the
     # full-surface, local[32] series only.
-    if tier == "headline" or os.environ.get("SPARK_GRAFT_CPUS", "32") != "32":
+    # Parsed like session.py does, so " 32" or "032" still count as 32;
+    # an unparseable value is never the local[32] series.
+    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        cpus = int(cpus_env)
+    except ValueError:
+        cpus = None
+    if tier == "headline" or cpus != 32:
         print(
-            f"[bench] tier={tier} cpus="
-            f"{os.environ.get('SPARK_GRAFT_CPUS', '32')}: durable "
+            f"[bench] tier={tier} cpus={cpus_env}: durable "
             "BENCH_LOCAL record not written (full-surface local[32] "
             "series only)",
             file=sys.stderr,

@@ -21,9 +21,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from fuzzy_item_matching_spark.functions.vector import dot
 
@@ -59,13 +62,23 @@ def _folded_dot_block_diag(a: np.ndarray) -> np.ndarray:
     return acc
 
 
+def _vector_block(col: pa.Array | pa.ChunkedArray, dim: int) -> np.ndarray:
+    """(n, dim) float64 matrix over an Arrow ``list<double>`` column of
+    non-NULL dim-long vectors. ``list_flatten`` (not ``.values``)
+    honours the list offsets, so a sliced batch reads its own rows
+    only; NULL elements become NaN, as in the pandas conversion."""
+    flat = pc.list_flatten(col)
+    return flat.to_numpy(zero_copy_only=False).reshape(-1, dim)
+
+
 def valid_vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     """Drop NULL / wrong-dimension vectors before an Arrow-batched
     numpy kernel. ``np.stack`` over a batch containing a None or a
-    ragged array raises and KILLS THE TASK (and with it the job),
-    where the pure-Catalyst expression path would just yield NULL for
-    that row; on real (dirty) 100 TB inputs one bad row must cost one
-    row, not the query. Rows failing the guard simply produce no
+    ragged array raises and KILLS THE TASK (and with it the job), and
+    a flat-buffer reshape either raises or silently shifts every later
+    row, where the pure-Catalyst expression path would just yield NULL
+    for that row; on real (dirty) 100 TB inputs one bad row must cost
+    one row, not the query. Rows failing the guard simply produce no
     pairs/neighbors — the same observable outcome as a NULL hash that
     never equi-joins."""
     c = F.col(vec_col)
@@ -523,11 +536,14 @@ def lsh_sqdist_join(
     more tables), which is an index-tuning decision, not a join-shape
     one.
 
-    Plan: bucket arrays (narrow) → posexplode by (table_idx, bucket) →
-    cogrouped ``applyInPandas`` scoring each bucket block with ONE
-    numpy pass (dimension-ordered accumulation → bitwise equal to the
+    Plan: bucket ids (one dimension-ordered numpy fold per Arrow batch,
+    ``mapInArrow``) → one row per (table_idx, bucket) carrying the
+    vector → grouped (self) / cogrouped (pair) ``applyInArrow`` scoring
+    each bucket block with ONE numpy pass over the block's flat vector
+    buffer (dimension-ordered accumulation → bitwise equal to the
     fold-based expression and the SQL oracle) → threshold filter inside
-    the block → distinct surviving pairs.
+    the block → distinct surviving pairs. Vectors stay Arrow list
+    buffers end to end: no per-row Python object is ever built.
 
     Why blockwise instead of the ids-only equi-join + vector re-join:
     candidate pairs vastly outnumber surviving pairs, and the pair-level
@@ -539,26 +555,26 @@ def lsh_sqdist_join(
     (pair bytes/8), i.e. whenever collisions are non-trivial, and the
     filtered output (not the candidate set) is all that's left after.
     Bucket skew: a block must fit one task (bucket_length controls
-    occupancy); beyond that, AQE can't split a pandas group — shrink
+    occupancy); beyond that, AQE can't split an Arrow group — shrink
     bucket_length or add tables.
     """
     if dim is None:
         dim = _infer_dim(left, vec_col)
-    left = valid_vectors(left, vec_col, dim)  # np.stack dies on NULL/ragged
+    # the flat-buffer reshape needs every vector non-NULL and exactly dim long
+    left = valid_vectors(left, vec_col, dim)
     if right is not None:
         right = valid_vectors(right, vec_col, dim)
     planes = random_hyperplanes(dim, n_tables, seed)
     planes_arr = np.asarray(planes, dtype=np.float64)  # (tables, dim)
 
     def buckets(df: DataFrame, out_id: str) -> DataFrame:
-        # r14 (guide §4.2, the sign_bucket_frame precedent): the
-        # n_tables per-row dots run as ONE dimension-ordered numpy
-        # fold over Arrow batches instead of the interpreted
-        # per-element expression fold (measured 1.8 s/side at sf0.1
-        # for the expression form). The fold order is the expression
-        # dot's left-to-right accumulation exactly, and
-        # floor(acc/bucket_length) on float64 matches Spark's
-        # Divide+floor — bit-identical bucket ids.
+        # The n_tables per-row dots run as ONE dimension-ordered numpy
+        # fold per Arrow batch instead of the interpreted per-element
+        # expression fold. The fold order is the expression dot's
+        # left-to-right accumulation exactly, and floor(acc/bucket_length)
+        # on float64 matches Spark's Divide+floor — bit-identical bucket
+        # ids. Each table's output batch reuses the input vector column
+        # as is, so replicating a vector per table costs no Python work.
         id_type = df.schema[out_id].dataType
         schema = T.StructType(
             [
@@ -570,30 +586,28 @@ def lsh_sqdist_join(
         )
 
         def bucketize(batches):
-            for pdf in batches:
-                if pdf.empty:
+            for b in batches:
+                n = b.num_rows
+                if n == 0:
                     continue
-                v = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-                acc = np.zeros((len(v), n_tables), dtype=np.float64)
+                ids, vecs = b.column(0), b.column(1)
+                v = _vector_block(vecs, dim)
+                acc = np.zeros((n, n_tables), dtype=np.float64)
                 for i in range(dim):
                     acc += v[:, i, None] * planes_arr[None, :, i]
                 bkt = np.floor(acc / bucket_length).astype(np.int64)
-                ids = pdf[out_id].to_numpy()
-                yield pd.concat(
-                    [
-                        pd.DataFrame(
-                            {
-                                out_id: ids,
-                                "__tbl": t,
-                                "__bkt": bkt[:, t],
-                                "__v": list(v),
-                            }
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
+                for t in range(n_tables):
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            ids,
+                            pa.array(np.full(n, t, dtype=np.int32)),
+                            pa.array(bkt[:, t]),
+                            vecs,
+                        ],
+                        names=[out_id, "__tbl", "__bkt", "__v"],
+                    )
 
-        return df.select(out_id, "__v").mapInPandas(bucketize, schema=schema)
+        return df.select(out_id, "__v").mapInArrow(bucketize, schema=schema)
 
     self_mode = right is None
     id_type = left.schema[id_col].dataType
@@ -604,32 +618,33 @@ def lsh_sqdist_join(
             T.StructField(dist_col, T.DoubleType()),
         ]
     )
+    out_arrow = to_arrow_schema(out_schema)
     la = left.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).cast("array<double>").alias("__v")
     )
     ba = buckets(la, "id_a")
 
-    def empty() -> pd.DataFrame:
-        return pd.DataFrame({"id_a": [], "id_b": [], dist_col: []}).astype(
-            {dist_col: "float64"}
+    def pair_table(ids_a, ids_b, ia, ib, d2) -> pa.Table:
+        # take() keeps the ids' own Arrow type (int, string, ...) —
+        # also for the empty result
+        return pa.Table.from_arrays(
+            [ids_a.take(ia), ids_b.take(ib), pa.array(d2[ia, ib])],
+            schema=out_arrow,
         )
 
     if self_mode:
 
-        def score_self(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) < 2:
-                return empty()
-            v = np.stack(pdf["__v"].to_numpy())
-            ids = pdf["id_a"].to_numpy()
+        def score_self(tbl: pa.Table) -> pa.Table:
+            if tbl.num_rows < 2:
+                return out_arrow.empty_table()
+            v = _vector_block(tbl.column("__v"), dim)
+            ids = tbl.column("id_a")
+            idn = ids.to_numpy()
             d2 = _folded_sqdist_block(v, v)
-            ia, ib = np.nonzero(
-                (ids[:, None] < ids[None, :]) & (d2 <= threshold)
-            )
-            return pd.DataFrame(
-                {"id_a": ids[ia], "id_b": ids[ib], dist_col: d2[ia, ib]}
-            )
+            ia, ib = np.nonzero((idn[:, None] < idn[None, :]) & (d2 <= threshold))
+            return pair_table(ids, ids, ia, ib, d2)
 
-        scored = ba.groupBy("__tbl", "__bkt").applyInPandas(
+        scored = ba.groupBy("__tbl", "__bkt").applyInArrow(
             score_self, schema=out_schema
         )
     else:
@@ -650,25 +665,19 @@ def lsh_sqdist_join(
                 .drop("__brn")
             )
 
-        def score_pair(
-            _key: tuple, apdf: pd.DataFrame, bpdf: pd.DataFrame
-        ) -> pd.DataFrame:
-            if apdf.empty or bpdf.empty:
-                return empty()
-            va = np.stack(apdf["__v"].to_numpy())
-            vb = np.stack(bpdf["__v"].to_numpy())
-            ia_ids = apdf["id_a"].to_numpy()
-            ib_ids = bpdf["id_b"].to_numpy()
-            d2 = _folded_sqdist_block(va, vb)
-            ia, ib = np.nonzero(d2 <= threshold)
-            return pd.DataFrame(
-                {"id_a": ia_ids[ia], "id_b": ib_ids[ib], dist_col: d2[ia, ib]}
+        def score_pair(a: pa.Table, b: pa.Table) -> pa.Table:
+            if a.num_rows == 0 or b.num_rows == 0:
+                return out_arrow.empty_table()
+            d2 = _folded_sqdist_block(
+                _vector_block(a.column("__v"), dim), _vector_block(b.column("__v"), dim)
             )
+            ia, ib = np.nonzero(d2 <= threshold)
+            return pair_table(a.column("id_a"), b.column("id_b"), ia, ib, d2)
 
         scored = (
             ba.groupBy("__tbl", "__bkt")
             .cogroup(rb.groupBy("__tbl", "__bkt"))
-            .applyInPandas(score_pair, schema=out_schema)
+            .applyInArrow(score_pair, schema=out_schema)
         )
     # a pair colliding in several tables is scored per table with an
     # identical distance → distinct collapses the duplicates

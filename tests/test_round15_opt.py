@@ -126,3 +126,66 @@ def test_stolcke_bigrams_match_positions_join(spark):
     )
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
+
+
+def test_coverage_greedy_matches_replay_over_positions_postings(spark):
+    """ts_coverage_greedy r15: row-local bigram postings and a covered
+    set derived by semi-join of the picked ids. Must equal a driver-side
+    greedy replay over the old (doc_id, pos) self-join postings: same
+    picks, same marginal gains, and covered_terms equal to the size of
+    the replayed covered set."""
+    from fuzzy_item_matching_spark.functions.text import regex_tokenize
+    from fuzzy_item_matching_spark.queries.textstats import _COV_ROUNDS
+
+    got = [
+        (r["round"], r["doc_id"], r["gain"], r["covered_terms"])
+        for r in _REG["ts_coverage_greedy"].fn(spark, SF_SMOKE).collect()
+    ]
+    d = load_table(spark, SF_SMOKE, "documents")
+    tkp = d.select(
+        "doc_id", F.posexplode(regex_tokenize("text")).alias("pos", "t")
+    )
+    a = tkp.select("doc_id", "pos", F.col("t").alias("h"))
+    b = tkp.select(
+        "doc_id", (F.col("pos") - 1).alias("pos"), F.col("t").alias("w")
+    )
+    post: dict[int, set[str]] = {}
+    for r in (
+        a.join(b, ["doc_id", "pos"])
+        .select("doc_id", F.concat_ws(" ", "h", "w").alias("term"))
+        .distinct()
+        .collect()
+    ):
+        post.setdefault(r["doc_id"], set()).add(r["term"])
+    covered: set[str] = set()
+    want = []
+    for rnd in range(1, _COV_ROUNDS + 1):
+        gains = {doc: len(terms - covered) for doc, terms in post.items()}
+        doc = min((k for k, g in gains.items() if g > 0), key=lambda k: (-gains[k], k))
+        covered |= post[doc]
+        want.append((rnd, doc, gains[doc], len(covered)))
+    assert sorted(got) == want
+
+
+def test_corpus_clean_slim_anti_join_matches_oracle(spark):
+    """pipe_corpus_clean r15: n_pieces is computed on the survivors
+    BEFORE the near-dup anti-join. The composed DuckDB oracle keeps the
+    old order (anti-join first, then n_pieces from the surviving rows'
+    text), so equality at sf0.001 pins the reordering."""
+    import os
+
+    import duckdb
+
+    from fuzzy_item_matching_spark.tables import TABLE_NAMES, table_path
+    from tests.conftest import assert_matches_oracle
+
+    q = _REG["pipe_corpus_clean"]
+    con = duckdb.connect()
+    try:
+        for name in TABLE_NAMES:
+            path = table_path(SF_SMOKE, name)
+            if os.path.exists(path):
+                con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
+        assert_matches_oracle(q.fn(spark, SF_SMOKE), con, q.oracle)
+    finally:
+        con.close()
