@@ -586,6 +586,10 @@ def connected_components(
     carry over unchanged. Equality of the two on planted cluster and
     chain graphs is pinned in tests/test_round9_ops.py.
 
+    Exhausting ``max_iter`` before the fixpoint raises ``RuntimeError``
+    (as :func:`connected_components_star` does): intermediate labels
+    are not the component minimums.
+
     Driver-side per-round work is ONE count (the convergence test) —
     labels themselves never collect. ``localCheckpoint`` truncates the
     growing join lineage each round (iterative plans otherwise re-plan
@@ -629,8 +633,14 @@ def connected_components(
         changed = new_labels.filter(F.col("__chg")).count()
         labels = new_labels.drop("__chg")
         if changed == 0:
-            break
-    return labels
+            return labels
+    # Labels still moving after max_iter rounds are not the component
+    # minimums the contract promises; never return them silently.
+    raise RuntimeError(
+        f"connected_components: no fixpoint after {max_iter} rounds; "
+        "raise max_iter (min-label propagation needs graph diameter + 1 "
+        "rounds) or use connected_components_star"
+    )
 
 
 def connected_components_star(

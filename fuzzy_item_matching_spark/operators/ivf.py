@@ -17,13 +17,25 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from fuzzy_item_matching_spark.functions.vector import dot, l2_norm
+from fuzzy_item_matching_spark.operators.blocks import (
+    _folded_dot_block,
+    _infer_dim,
+    _vector_block,
+    cosine_block,
+    cosine_topk_block,
+    fixed_lists,
+    global_topk,
+    id_ranks,
+    pair_table,
+    topk_schema,
+    valid_vectors,
+)
 
 
 def _unit(vec: list[float]) -> list[float]:
@@ -47,34 +59,17 @@ def sample_centroids(
     return [_unit([float(x) for x in r[1]]) for r in rows]
 
 
-def _cell_scores(vec: Column, centroids: list[list[float]]) -> Column:
-    """array<struct<score,cell>> — dot with each unit centroid (vector
-    norm is constant across cells, so dot order == cosine order)."""
-    return F.array(
-        *[
-            F.struct(
-                dot(vec, F.array(*[F.lit(x) for x in c])).alias("score"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-
-
 def _cell_order_block(v: np.ndarray, cents: np.ndarray) -> np.ndarray:
     """Per row, the centroid ids ordered as
-    ``reverse(array_sort(_cell_scores(v)))`` — i.e. score DESC, ties
-    cell DESC. The scores come from the same dimension-ordered float64
-    fold as the expression dot (bit-identical values — the
-    operators/lsh.py `_folded_dot_block` contract), and a STABLE
-    ascending argsort reversed reproduces the struct sort's
-    (score asc, cell asc)→reversed order exactly, including NaN-last
-    (Spark orders NaN greatest; numpy sorts NaN last; among equal
-    keys both keep cell-ascending, so the reversed tail matches)."""
-    acc = np.zeros((v.shape[0], cents.shape[0]), dtype=np.float64)
-    for i in range(v.shape[1]):
-        acc += v[:, i, None] * cents[None, :, i]
-    return np.argsort(acc, axis=1, kind="stable")[:, ::-1]
+    ``reverse(array_sort(array(struct(dot(v, c_i), i) ...)))`` — i.e.
+    score DESC, ties cell DESC (the oracles' form). The scores come
+    from the dimension-ordered float64 fold (``_folded_dot_block``,
+    bit-identical to the expression dot), and a STABLE ascending
+    argsort reversed reproduces the struct sort's (score asc, cell
+    asc)→reversed order exactly, including NaN-last (Spark orders NaN
+    greatest; numpy sorts NaN last; among equal keys both keep
+    cell-ascending, so the reversed tail matches)."""
+    return np.argsort(_folded_dot_block(v, cents), axis=1, kind="stable")[:, ::-1]
 
 
 def cell_order_frame(
@@ -83,58 +78,48 @@ def cell_order_frame(
     vec_col: str,
     centroids: list[list[float]],
     keep_vec: bool = False,
-    keep_norm: bool = False,
 ) -> DataFrame:
-    """(__id, __cells int[], [__v double[]], [__n]) — every vector's
-    centroid ids in probe order, via ONE Arrow/numpy pass.
+    """(__id, __cells int[], [__v double[]]) — every vector's centroid
+    ids in probe order, via ONE Arrow/numpy pass.
 
-    r14 (guide §4.2): the expression form (`_cell_scores` →
-    array_sort → reverse) embeds n_centroids × dim literals in the
+    r14 (guide §4.2): the expression form (a struct(dot, cell) array
+    → array_sort → reverse) embeds n_centroids × dim literals in the
     plan; at 16×64 that is a ~1k-node expression tree whose ANALYSIS
     and codegen cost is scale-INDEPENDENT (the documented pq.py
     plan-size lesson) on top of the interpreted per-row HOF fold.
     Here the centroid matrix rides the task closure as data, the
     fold is the numpy dimension-ordered pass (bit-identical dots —
     `_folded_dot_block`), and the plan is one narrow projection +
-    MapInPandas. Map-only: no exchange at any corpus size."""
-    from fuzzy_item_matching_spark.operators.lsh import (
-        _folded_dot_block_diag,
-        valid_vectors,
-    )
-
+    MapInArrow over flat vector buffers (``__v`` passes through as
+    the input column). Map-only: no exchange at any corpus size."""
     cents = np.asarray(centroids, dtype=np.float64)
-    df = valid_vectors(df, vec_col, cents.shape[1])
-    id_type = df.schema[id_col].dataType
+    dim = cents.shape[1]
+    df = valid_vectors(df, vec_col, dim)
     fields = [
-        T.StructField("__id", id_type),
+        T.StructField("__id", df.schema[id_col].dataType),
         T.StructField("__cells", T.ArrayType(T.IntegerType())),
     ]
     if keep_vec:
         fields.append(T.StructField("__v", T.ArrayType(T.DoubleType())))
-    if keep_norm:
-        fields.append(T.StructField("__n", T.DoubleType()))
     schema = T.StructType(fields)
+    names = schema.fieldNames()
 
     def order_cells(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
                 continue
-            v = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            out = {
-                "__id": pdf["__id"].to_numpy(),
-                "__cells": list(_cell_order_block(v, cents).astype(np.int32)),
-            }
-            if keep_vec:
-                out["__v"] = list(v)
-            if keep_norm:
-                out["__n"] = np.sqrt(_folded_dot_block_diag(v))
-            yield pd.DataFrame(out)
+            vecs = b.column(1)
+            order = _cell_order_block(_vector_block(vecs, dim), cents)
+            cells = fixed_lists(pa.array(order.astype(np.int32).ravel()), n)
+            cols = [b.column(0), cells, vecs] if keep_vec else [b.column(0), cells]
+            yield pa.RecordBatch.from_arrays(cols, names=names)
 
     src = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     )
-    return src.mapInPandas(order_cells, schema=schema)
+    return src.mapInArrow(order_cells, schema=schema)
 
 
 REFINE_SAMPLE_CAP = 100_000
@@ -186,7 +171,7 @@ def refine_centroids(
     )
     for _ in range(iterations):
         # r14 (guide §4.2): per-pass assignment via the numpy kernel
-        # (cell_order_frame top-1) instead of the `_cell_scores`
+        # (cell_order_frame top-1) instead of a per-centroid dot
         # expression tree — bit-identical nearest cell, and each Lloyd
         # pass stops re-analyzing a fresh n_centroids×dim literal plan.
         cells = cell_order_frame(
@@ -243,14 +228,9 @@ def ivf_cosine_topk(
     Recall misses only neighbors whose cell the query didn't probe —
     graded vs brute force in tests.
     """
-    from fuzzy_item_matching_spark.operators.lsh import (
-        _infer_dim,
-        valid_vectors,
-    )
-
     dim = len(centroids[0]) if centroids else _infer_dim(df, vec_col)
-    # np.stack in score_cell dies on NULL/ragged rows; one bad row must
-    # cost one row, not the task (see operators/lsh.py valid_vectors).
+    # the flat reshape in score_cell needs dim-long rows; one bad row
+    # must cost one row, not the task (see operators/blocks.py)
     df = valid_vectors(df, vec_col, dim)
     if centroids is None:
         centroids = sample_centroids(df, id_col, vec_col, n_centroids)
@@ -260,24 +240,22 @@ def ivf_cosine_topk(
                 sample_cap=sample_cap,
             )
 
-    # r14 (guide §4.2): cell scoring moved from the `_cell_scores`
+    # r14 (guide §4.2): cell scoring moved from a per-centroid dot
     # expression tree (n_centroids×dim plan literals + interpreted HOF
     # folds, analysis cost scale-independent) to the one-pass numpy
     # kernel — same bit-identical dots, map-only.
     scored = cell_order_frame(
-        df, id_col, vec_col, centroids, keep_vec=True, keep_norm=True
+        df, id_col, vec_col, centroids, keep_vec=True
     ).persist()  # cell scoring = n_centroids dots per row; feeds both sides
 
     index = scored.select(
         F.col("__id").alias("nid"),
         F.col("__v").alias("__vn"),
-        F.col("__n").alias("__nn"),
         F.element_at("__cells", 1).alias("__cell"),
     )
     probes = scored.select(
         F.col("__id").alias("qid"),
         F.col("__v").alias("__vq"),
-        F.col("__n").alias("__nq"),
         F.explode(F.slice("__cells", 1, n_probe)).alias("__cell"),
     )
 
@@ -286,71 +264,37 @@ def ivf_cosine_topk(
     # |index-in-cell| rows each paying an interpreted per-pair
     # array-dot (measured 16s for 2M pairs at sf0.1), cogroup ships
     # each cell's probe/index vectors ONCE over Arrow and scores the
-    # block with one numpy matmul (~3s end-to-end). Per-cell top-k
-    # bounds the output to k·n_probe candidates per query; the exact
-    # global top-k window below is then tiny. Scale notes: both sides
+    # block with one folded numpy pass (``cosine_topk_block``). Per-cell
+    # top-k bounds the output to k·n_probe candidates per query; the
+    # exact global top-k window is then tiny. Scale notes: both sides
     # shuffle by cell id exactly once (same volume as the equi-join's
     # shuffle WITHOUT the pair expansion); a cell block must fit one
     # task's memory, so n_centroids grows ~√n to bound occupancy.
-    id_field = df.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", id_field.dataType),
-            T.StructField("nid", id_field.dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    out_schema = topk_schema(df.schema[id_col].dataType)
+    out_arrow = to_arrow_schema(out_schema)
 
-    def score_cell(
-        _key: tuple, probe_pdf: pd.DataFrame, index_pdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        if probe_pdf.empty or index_pdf.empty:
-            return pd.DataFrame(
-                {"qid": [], "nid": [], "cosine": []}
-            ).astype({"cosine": "float64"})
-        from fuzzy_item_matching_spark.operators.lsh import _folded_dot_block
-
-        q = np.stack(probe_pdf["__vq"].to_numpy())
-        x = np.stack(index_pdf["__vn"].to_numpy())
-        qn = probe_pdf["__nq"].to_numpy()
-        xn = index_pdf["__nn"].to_numpy()
-        denom = np.outer(qn, xn)
-        # Dimension-ordered accumulation (not matmul's pairwise sums):
-        # the same left-to-right IEEE fold as the F.aggregate dot and
-        # DuckDB list_sum, keeping blockwise results bitwise
-        # oracle-exact (see operators/lsh.py).
-        cos = np.divide(
-            _folded_dot_block(q, x), denom,
-            out=np.zeros_like(denom), where=denom != 0.0,
+    def score_cell(probe: pa.Table, index: pa.Table) -> pa.Table:
+        if probe.num_rows == 0 or index.num_rows == 0:
+            return out_arrow.empty_table()
+        return cosine_topk_block(
+            out_arrow,
+            probe.column("qid"),
+            _vector_block(probe.column("__vq"), dim),
+            index.column("nid"),
+            _vector_block(index.column("__vn"), dim),
+            k,
         )
-        qids = probe_pdf["qid"].to_numpy()
-        nids = index_pdf["nid"].to_numpy()
-        cos[qids[:, None] == nids[None, :]] = -np.inf  # self-pairs
-        rows_q, rows_n, rows_c = [], [], []
-        kk = min(k, len(nids))
-        for i in range(len(qids)):
-            # ties broken by ascending nid to match the global window
-            order = np.lexsort((nids, -cos[i]))[:kk]
-            order = order[np.isfinite(cos[i][order])]
-            rows_q.extend([qids[i]] * len(order))
-            rows_n.extend(nids[order])
-            rows_c.extend(cos[i][order])
-        return pd.DataFrame({"qid": rows_q, "nid": rows_n, "cosine": rows_c})
 
     cand = (
         probes.groupBy("__cell")
         .cogroup(index.groupBy("__cell"))
-        .applyInPandas(score_cell, schema=out_schema)
+        .applyInArrow(score_cell, schema=out_schema)
     )
     # Each index vector lives in exactly one cell → (qid, nid) pairs are
     # unique across cells; global exact top-k over ≤ k·n_probe
     # candidates per query.
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cosine", "rnk")
-    )
+    return global_topk(cand, k)
+
 
 def assign_cells(
     df: DataFrame,
@@ -358,14 +302,12 @@ def assign_cells(
     vec_col: str,
     centroids: list[list[float]],
 ) -> DataFrame:
-    """(__id, __v double[], __n norm, __cell) — each vector assigned to
-    its single nearest centroid (max dot, ties to the higher cell id —
-    the same reverse-array_sort order as ``ivf_cosine_topk``). One
-    numpy pass (`cell_order_frame`, r14), no shuffle."""
-    return cell_order_frame(
-        df, id_col, vec_col, centroids, keep_vec=True, keep_norm=True
-    ).select(
-        "__id", "__v", "__n", F.element_at("__cells", 1).alias("__cell")
+    """(__id, __cell) — each vector assigned to its single nearest
+    centroid (max dot, ties to the higher cell id — the same
+    reverse-array_sort order as ``ivf_cosine_topk``). One numpy pass
+    (`cell_order_frame`, r14), no shuffle."""
+    return cell_order_frame(df, id_col, vec_col, centroids).select(
+        "__id", F.element_at("__cells", 1).alias("__cell")
     )
 
 
@@ -391,7 +333,7 @@ def ivf_cell_pairs(
 
     Per-cell blocks are scored with one Arrow round-trip and a
     dimension-folded numpy block dot (bitwise equal to the F.aggregate
-    / DuckDB list_sum fold — see operators/lsh.py); per-pair cosine is
+    / DuckDB list_sum fold — see operators/blocks.py); per-pair cosine is
     independent of block membership, so the cross-block duplicates the
     final (id_a, id_b) groupBy collapses carry identical bits and the
     whole output is exactly oracle-replayable. Shuffles: one
@@ -405,12 +347,6 @@ def ivf_cell_pairs(
     exact ≥0.4 pairs from 24% of the n² candidate volume
     (tests/test_dedup.py grades the subset + recall floor).
     """
-    from fuzzy_item_matching_spark.operators.lsh import (
-        _folded_dot_block,
-        _infer_dim,
-        valid_vectors,
-    )
-
     dim = len(centroids[0]) if centroids else _infer_dim(df, vec_col)
     df = valid_vectors(df, vec_col, dim)
     if centroids is None:
@@ -424,49 +360,45 @@ def ivf_cell_pairs(
     # r14 (guide §4.2): probe-cell assignment via the numpy kernel —
     # see cell_order_frame; bit-identical order, map-only.
     probes = cell_order_frame(
-        df, id_col, vec_col, centroids, keep_vec=True, keep_norm=True
+        df, id_col, vec_col, centroids, keep_vec=True
     ).select(
         "__id",
         "__v",
-        "__n",
         F.explode(F.slice("__cells", 1, n_probe)).alias("__cell"),
     )
-    id_field = df.schema[id_col]
     out_schema = T.StructType(
         [
-            T.StructField("id_a", id_field.dataType),
-            T.StructField("id_b", id_field.dataType),
+            T.StructField("id_a", df.schema[id_col].dataType),
+            T.StructField("id_b", df.schema[id_col].dataType),
             T.StructField("cell", T.IntegerType()),
             T.StructField("cosine", T.DoubleType()),
         ]
     )
+    out_arrow = to_arrow_schema(out_schema)
 
-    def cell_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cell": [], "cosine": []}
-            ).astype({"cell": "int32", "cosine": "float64"})
-        pdf = pdf.sort_values("__id")  # ascending ids → triu ⇒ id_a < id_b
-        v = np.stack(pdf["__v"].to_numpy())
-        nrm = pdf["__n"].to_numpy()
-        denom = np.outer(nrm, nrm)
-        cos = np.divide(
-            _folded_dot_block(v, v), denom,
-            out=np.zeros_like(denom), where=denom != 0.0,
-        )
-        ia, ib = np.triu_indices(len(pdf), k=1)
+    def cell_pairs(key: tuple, tbl: pa.Table) -> pa.Table:
+        if tbl.num_rows < 2:
+            return out_arrow.empty_table()
+        ids = tbl.column("__id")
+        # ascending ids → upper triangle ⇒ id_a < id_b
+        (rank,) = id_ranks(ids)
+        order = np.argsort(rank, kind="stable")
+        v = _vector_block(tbl.column("__v"), dim)[order]
+        cos = cosine_block(v, v)
+        ia, ib = np.triu_indices(len(order), k=1)
         keep = cos[ia, ib] >= min_cosine
-        ids = pdf["__id"].to_numpy()
-        return pd.DataFrame(
-            {
-                "id_a": ids[ia[keep]],
-                "id_b": ids[ib[keep]],
-                "cell": np.full(int(keep.sum()), key[0], dtype="int32"),
-                "cosine": cos[ia[keep], ib[keep]],
-            }
+        ia, ib = ia[keep], ib[keep]
+        return pair_table(
+            out_arrow,
+            ids,
+            order[ia],
+            ids,
+            order[ib],
+            np.full(len(ia), key[0].as_py(), dtype=np.int32),
+            cos[ia, ib],
         )
 
-    raw = probes.groupBy("__cell").applyInPandas(cell_pairs, schema=out_schema)
+    raw = probes.groupBy("__cell").applyInArrow(cell_pairs, schema=out_schema)
     # A pair sharing several probed cells repeats with IDENTICAL cosine
     # bits (per-pair fold is block-independent); keep the lowest cell.
     # min(cosine) == the value — used over first() for determinism.

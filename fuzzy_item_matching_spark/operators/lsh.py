@@ -8,90 +8,43 @@ vectors g_i; two rows are candidates iff they collide in ≥1 table, and
 the join keeps candidates with true distance ≤ threshold.
 
 This module is the same algorithm as explicit DataFrame ops:
-hyperplanes are tiny seeded constants folded into the plan (a few KB —
-a driver-side literal, broadcast with the task binary), bucketing is a
-JVM-side array expression, and the candidate join is a plain equi-join
-on (table_idx, bucket) that Catalyst shuffles/AQE-balances. Recall < 1
-by construction; precision = 1 after the exact distance filter.
+hyperplanes are tiny seeded constants shipped with the task closure (a
+few KB), bucketing is one dimension-ordered numpy fold per Arrow batch
+(``mapInArrow``), and each (table, bucket) block is verified by a
+grouped / cogrouped ``applyInArrow`` kernel over flat vector buffers
+(``operators/blocks.py``). Recall < 1 by construction; precision = 1
+after the exact distance filter.
 Correctness contract (SURVEY §7.3): LSH pairs ⊆ exact pairs, recall
 reported vs `exact_sqdist_join` — never hash-equality.
 """
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.window import Window
 
 from fuzzy_item_matching_spark.functions.vector import dot
-
-
-def _folded_sqdist_block(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """All-pairs Σ (aᵢ-bᵢ)² for blocks a (na×d), b (nb×d) → (na×nb),
-    accumulated DIMENSION BY DIMENSION: each output lane performs the
-    identical left-to-right IEEE add sequence as the engine's
-    fold-based ``squared_dist`` (and DuckDB's list_sum), so blockwise
-    numpy scoring stays BITWISE equal to the SQL oracle — np.sum's
-    pairwise summation would not be."""
-    acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
-    for i in range(a.shape[1]):
-        d = a[:, i, None] - b[None, :, i]
-        acc += d * d
-    return acc
-
-
-def _folded_dot_block(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """All-pairs Σ aᵢ·bᵢ with the same fold-order guarantee as
-    ``_folded_sqdist_block``."""
-    acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
-    for i in range(a.shape[1]):
-        acc += a[:, i, None] * b[None, :, i]
-    return acc
-
-
-def _folded_dot_block_diag(a: np.ndarray) -> np.ndarray:
-    """Per-row Σ xᵢ² with the same fold order (the l2_norm prefix)."""
-    acc = np.zeros(a.shape[0], dtype=np.float64)
-    for i in range(a.shape[1]):
-        acc += a[:, i] * a[:, i]
-    return acc
-
-
-def _vector_block(col: pa.Array | pa.ChunkedArray, dim: int) -> np.ndarray:
-    """(n, dim) float64 matrix over an Arrow ``list<double>`` column of
-    non-NULL dim-long vectors. ``list_flatten`` (not ``.values``)
-    honours the list offsets, so a sliced batch reads its own rows
-    only; NULL elements become NaN, as in the pandas conversion."""
-    flat = pc.list_flatten(col)
-    return flat.to_numpy(zero_copy_only=False).reshape(-1, dim)
-
-
-def valid_vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """Drop NULL / wrong-dimension vectors before an Arrow-batched
-    numpy kernel. ``np.stack`` over a batch containing a None or a
-    ragged array raises and KILLS THE TASK (and with it the job), and
-    a flat-buffer reshape either raises or silently shifts every later
-    row, where the pure-Catalyst expression path would just yield NULL
-    for that row; on real (dirty) 100 TB inputs one bad row must cost
-    one row, not the query. Rows failing the guard simply produce no
-    pairs/neighbors — the same observable outcome as a NULL hash that
-    never equi-joins."""
-    c = F.col(vec_col)
-    return df.filter(c.isNotNull() & (F.size(c) == dim))
-
-
-def _infer_dim(df: DataFrame, vec_col: str) -> int:
-    """Vector dimensionality from the first non-null row (dirty-input
-    safe — ``first()[0]`` alone can hand back None)."""
-    row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-    if row is None:
-        raise ValueError(f"cannot infer dim: no non-null '{vec_col}' rows")
-    return len(row[0])
+from fuzzy_item_matching_spark.operators.blocks import (
+    _folded_dot_block,
+    _folded_sqdist_block,
+    _infer_dim,
+    _vector_block,
+    bit_strings,
+    cosine_topk_block,
+    fixed_lists,
+    global_topk,
+    id_ranks,
+    pair_table,
+    topk_schema,
+    valid_vectors,
+)
 
 
 def random_hyperplanes(dim: int, n_tables: int, seed: int = 42) -> list[list[float]]:
@@ -119,31 +72,6 @@ def brp_hashes(
     )
 
 
-def sign_lsh_buckets(
-    vec: Column | str,
-    planes: list[list[float]],
-    n_tables: int,
-    bits_per_table: int,
-) -> Column:
-    """Sign-bit (SRP) LSH buckets for COSINE similarity: per table, a
-    bit-string of sign(dot(v, g_i)) over that table's hyperplanes.
-    P[bit match] = 1 - θ/π — collision probability tracks the angle."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    assert len(planes) == n_tables * bits_per_table
-    buckets = []
-    for t in range(n_tables):
-        bits = [
-            F.when(
-                dot(v, F.array(*[F.lit(x) for x in planes[t * bits_per_table + b]]))
-                >= 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0"))
-            for b in range(bits_per_table)
-        ]
-        buckets.append(F.concat(*bits))
-    return F.array(*buckets)
-
-
 def sign_bucket_frame(
     df: DataFrame,
     id_col: str,
@@ -156,11 +84,13 @@ def sign_bucket_frame(
     max_flip: int = 3,
 ) -> DataFrame:
     """(__id, __tbl, __bkt, __v) sign-LSH bucket frame via ONE folded
-    numpy pass over Arrow batches (the column-expression form is an
-    interpreted per-element fold, measured 7-10 s alone at sf0.1).
-    Fold order matches the expression/oracle exactly
-    (_folded_dot_block). Shared by lsh_cosine_topk and the multiprobe
-    variant.
+    numpy pass per Arrow batch (``mapInArrow``; the column-expression
+    form is an interpreted per-element fold, measured 7-10 s alone at
+    sf0.1). Fold order matches the expression/oracle exactly
+    (_folded_dot_block). Bucket strings are built for the whole batch
+    at once from the sign-bit matrix, and each table's output batch
+    reuses the input vector column as is. Shared by lsh_cosine_topk and
+    the multiprobe variant.
 
     ``probe_budget=T`` adds a ``__probes`` array<string> column: the
     T neighbor buckets obtained by flipping the perturbation SETS
@@ -171,10 +101,9 @@ def sign_bucket_frame(
     falls with its margin, so low-margin sets are where missed
     neighbors live. The margins fall out of the same folded dot pass
     that computes the signs, so directing is free at bucketing time.
-    The own bucket is NOT in ``__probes``."""
-    import itertools
-
-    df = valid_vectors(df, vec_col, dim)  # np.stack dies on NULL/ragged
+    Each probe is the own bucket's bits XOR the ranked subset's flip
+    mask. The own bucket is NOT in ``__probes``."""
+    df = valid_vectors(df, vec_col, dim)  # the flat reshape needs dim-long rows
     planes = random_hyperplanes(dim, n_tables * bits_per_table, seed)
     planes_arr = np.asarray(planes, dtype=np.float64)  # (tables·bits, dim)
 
@@ -188,6 +117,7 @@ def sign_bucket_frame(
     if probe_budget is not None:
         fields.append(T.StructField("__probes", T.ArrayType(T.StringType())))
     bucket_schema = T.StructType(fields)
+    names = bucket_schema.fieldNames()
     # lexicographically sorted subsets == the (score, j1, j2, j3)
     # tie-break the SQL oracle replays with NULLS FIRST ranking
     subsets = sorted(
@@ -195,59 +125,52 @@ def sign_bucket_frame(
         for r in range(1, max_flip + 1)
         for s in itertools.combinations(range(bits_per_table), r)
     )
+    flip_masks = np.zeros((len(subsets), bits_per_table), dtype=np.uint8)
+    for si, s in enumerate(subsets):
+        flip_masks[si, list(s)] = 1
 
     def bucketize(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
                 continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            acc = np.zeros((len(v), planes_arr.shape[0]), dtype=np.float64)
-            for i in range(planes_arr.shape[1]):
-                acc += v[:, i, None] * planes_arr[None, :, i]
-            chars = np.where(acc >= 0, "1", "0")
-            ids = pdf[id_col].to_numpy()
-            frames = []
+            ids, vecs = b.column(0), b.column(1)
+            acc = _folded_dot_block(_vector_block(vecs, dim), planes_arr)
+            bits = (acc >= 0).astype(np.uint8)
             for t in range(n_tables):
                 sl = slice(t * bits_per_table, (t + 1) * bits_per_table)
-                bits = chars[:, sl]
-                cols = {
-                    "__id": ids,
-                    "__tbl": t,
-                    "__bkt": ["".join(r) for r in bits],
-                    "__v": list(v),
-                }
+                cols = [
+                    ids,
+                    pa.array(np.full(n, t, dtype=np.int32)),
+                    bit_strings(bits[:, sl]),
+                    vecs,
+                ]
                 if probe_budget is not None:
                     m = np.abs(acc[:, sl])
                     # left-to-right addition per subset — the exact
                     # fold the oracle's a.m + b.m + c.m replays
-                    scores = np.empty((len(v), len(subsets)))
+                    scores = np.empty((n, len(subsets)))
                     for si, s in enumerate(subsets):
-                        tot = m[:, s[0]].copy()
+                        scores[:, si] = m[:, s[0]]
                         for j in s[1:]:
-                            tot = tot + m[:, j]
-                        scores[:, si] = tot
+                            scores[:, si] += m[:, j]
                     # columns are in subset-tuple order, so a stable
                     # argsort realizes the (score, tuple) tie-break
                     order = np.argsort(scores, axis=1, kind="stable")[
                         :, :probe_budget
                     ]
-                    probes = []
-                    for r in range(len(v)):
-                        base = bits[r]
-                        row = []
-                        for si in order[r]:
-                            pl = base.copy()
-                            for j in subsets[si]:
-                                pl[j] = "1" if pl[j] == "0" else "0"
-                            row.append("".join(pl))
-                        probes.append(row)
-                    cols["__probes"] = probes
-                frames.append(pd.DataFrame(cols))
-            yield pd.concat(frames)
+                    probes = bits[:, None, sl] ^ flip_masks[order]
+                    cols.append(
+                        fixed_lists(
+                            bit_strings(probes.reshape(-1, bits_per_table)), n
+                        )
+                    )
+                yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return df.select(id_col, vec_col).mapInPandas(
-        bucketize, schema=bucket_schema
-    )
+    return df.select(
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).cast("array<double>").alias("__v"),
+    ).mapInArrow(bucketize, schema=bucket_schema)
 
 
 def lsh_cosine_topk(
@@ -291,66 +214,33 @@ def lsh_cosine_topk(
     per bucket; pair the cap with MORE BITS when group memory, not
     compute, is the binding constraint.
     """
-    from pyspark.sql.window import Window
-
     if dim is None:
         dim = _infer_dim(df, vec_col)
-    id_type = df.schema[id_col].dataType
     buckets = sign_bucket_frame(
         df, id_col, vec_col, n_tables, bits_per_table, seed, dim
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", id_type),
-            T.StructField("nid", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    out_schema = topk_schema(df.schema[id_col].dataType)
+    out_arrow = to_arrow_schema(out_schema)
 
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"qid": [], "nid": [], "cosine": []}).astype(
-                {"cosine": "float64"}
-            )
-        v = np.stack(pdf["__v"].to_numpy())
-        ids = pdf["__id"].to_numpy()
-        if bucket_cap is not None and len(ids) > bucket_cap:
+    def score_bucket(tbl: pa.Table) -> pa.Table:
+        if tbl.num_rows < 2:
+            return out_arrow.empty_table()
+        v = _vector_block(tbl.column("__v"), dim)
+        ids = tbl.column("__id")
+        keep = np.arange(tbl.num_rows)
+        if bucket_cap is not None and tbl.num_rows > bucket_cap:
             # index side = the bucket_cap lowest ids (deterministic
             # posting-list truncation); query side = every row
-            keep = np.sort(np.argsort(ids, kind="stable")[:bucket_cap])
-        else:
-            keep = np.arange(len(ids))
-        vi, idx_ids = v[keep], ids[keep]
-        # per-row norm: same fold order as l2_norm (Σ x² then sqrt)
-        norms = np.sqrt(_folded_dot_block_diag(v))
-        dots = _folded_dot_block(v, vi)
-        denom = np.outer(norms, norms[keep])
-        cos = np.divide(
-            dots, denom, out=np.zeros_like(dots), where=denom != 0.0
-        )
-        same = ids[:, None] == idx_ids[None, :]
-        cos[same] = -np.inf  # self (and dup-id) pairs
-        kk = min(k, len(idx_ids))
-        rows_q, rows_n, rows_c = [], [], []
-        for i in range(len(ids)):
-            order = np.lexsort((idx_ids, -cos[i]))[:kk]
-            order = order[np.isfinite(cos[i][order])]
-            rows_q.extend([ids[i]] * len(order))
-            rows_n.extend(idx_ids[order])
-            rows_c.extend(cos[i][order])
-        return pd.DataFrame({"qid": rows_q, "nid": rows_n, "cosine": rows_c})
+            (rank,) = id_ranks(ids)
+            keep = np.sort(np.argsort(rank, kind="stable")[:bucket_cap])
+        return cosine_topk_block(out_arrow, ids, v, ids.take(keep), v[keep], k)
 
     cand = (
         buckets.groupBy("__tbl", "__bkt")
-        .applyInPandas(score_bucket, schema=out_schema)
+        .applyInArrow(score_bucket, schema=out_schema)
         .distinct()
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cosine", "rnk")
-    )
+    return global_topk(cand, k)
 
 
 def lsh_multiprobe_topk(
@@ -375,7 +265,9 @@ def lsh_multiprobe_topk(
     is the right trade when queries stream against a resident index.
 
     ``probe_budget=None`` flips every single bit (bits+1 probes per
-    table — the exhaustive-1-flip baseline, scored pairwise).
+    table — the exhaustive-1-flip baseline): the directed path with
+    ``probe_budget=bits_per_table, max_flip=1``, whose ranked single
+    flips are exactly every bit.
     ``probe_budget=T`` is Lv et al.'s actual contribution,
     QUERY-DIRECTED probing: rank the perturbation SETS of up to
     ``max_flip`` bits by total hyperplane margin Σ|dot(v, plane)| —
@@ -386,63 +278,20 @@ def lsh_multiprobe_topk(
     (0.713 vs 0.679) with HALF the index (2 tables), equal probe
     rows per query.
 
-    Verification in the directed path is BLOCKWISE: probes and index
-    rows cogroup on (table, bucket) and each block is scored with one
-    folded numpy pass (dimension-ordered accumulation + one IEEE
-    division per pair → bitwise equal to the fold expression and the
-    SQL oracle), pruned to k per query in-block (lossless: a global
-    top-k pair is within the top-k of every block containing it) —
-    the lsh_cosine_topk/lsh_sqdist_join discipline, vs the per-pair
-    interpreted cosine fold that dominated the exhaustive path's
-    runtime. Candidates still come only from (table, bucket)
-    collisions; never n².
+    Verification is BLOCKWISE: probes and index rows cogroup on
+    (table, bucket) and each block is scored with one folded numpy
+    pass (dimension-ordered accumulation + one IEEE division per pair
+    → bitwise equal to the fold expression and the SQL oracle), pruned
+    to k per query in-block (lossless: a global top-k pair is within
+    the top-k of every block containing it) — the
+    lsh_cosine_topk/lsh_sqdist_join discipline, vs a per-pair
+    interpreted cosine fold. Candidates still come only from
+    (table, bucket) collisions; never n².
     """
-    from pyspark.sql.window import Window
-
-    from fuzzy_item_matching_spark.functions.vector import cosine_similarity
-
     if dim is None:
         dim = _infer_dim(df, vec_col)
-    b = bits_per_table
-    id_type = df.schema[id_col].dataType
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     if probe_budget is None:
-        buckets = sign_bucket_frame(
-            df, id_col, vec_col, n_tables, bits_per_table, seed, dim
-        ).select("__id", "__tbl", "__bkt").persist()
-        flip = (
-            f"transform(sequence(0, {b}), j -> CASE WHEN j = 0 THEN __bkt "
-            f"ELSE concat(substring(__bkt, 1, j - 1), "
-            f"CASE WHEN substring(__bkt, j, 1) = '1' THEN '0' ELSE '1' END, "
-            f"substring(__bkt, j + 1, {b} - j)) END)"
-        )
-        probes = buckets.select(
-            "__id", "__tbl", F.explode(F.expr(flip)).alias("__probe")
-        )
-        cand = (
-            probes.alias("x")
-            .join(
-                buckets.alias("y"),
-                (F.col("x.__tbl") == F.col("y.__tbl"))
-                & (F.col("x.__probe") == F.col("y.__bkt")),
-            )
-            .filter(F.col("x.__id") != F.col("y.__id"))
-            .select(F.col("x.__id").alias("qid"), F.col("y.__id").alias("nid"))
-            .distinct()
-        )
-        q = df.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv"))
-        n = df.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("__nv"))
-        scored = cand.join(q, "qid").join(n, "nid").select(
-            "qid",
-            "nid",
-            cosine_similarity(F.col("__qv"), F.col("__nv")).alias("cosine"),
-        )
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("qid", "nid", "cosine", "rnk")
-        )
-
+        probe_budget, max_flip = bits_per_table, 1
     framed = sign_bucket_frame(
         df, id_col, vec_col, n_tables, bits_per_table, seed, dim,
         probe_budget=probe_budget, max_flip=max_flip,
@@ -456,55 +305,28 @@ def lsh_multiprobe_topk(
         ).alias("__bkt"),
         "__v",
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", id_type),
-            T.StructField("nid", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    out_schema = topk_schema(df.schema[id_col].dataType)
+    out_arrow = to_arrow_schema(out_schema)
 
-    def score_block(
-        _key: tuple, qpdf: pd.DataFrame, ipdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        if qpdf.empty or ipdf.empty:
-            return pd.DataFrame({"qid": [], "nid": [], "cosine": []}).astype(
-                {"cosine": "float64"}
-            )
-        vq = np.stack(qpdf["__v"].to_numpy())
-        vi = np.stack(ipdf["__v"].to_numpy())
-        qids = qpdf["__qid"].to_numpy()
-        nids = ipdf["__id"].to_numpy()
-        dots = _folded_dot_block(vq, vi)
-        denom = np.outer(
-            np.sqrt(_folded_dot_block_diag(vq)),
-            np.sqrt(_folded_dot_block_diag(vi)),
+    def score_block(q: pa.Table, i: pa.Table) -> pa.Table:
+        if q.num_rows == 0 or i.num_rows == 0:
+            return out_arrow.empty_table()
+        return cosine_topk_block(
+            out_arrow,
+            q.column("__qid"),
+            _vector_block(q.column("__v"), dim),
+            i.column("__id"),
+            _vector_block(i.column("__v"), dim),
+            k,
         )
-        cos = np.divide(
-            dots, denom, out=np.zeros_like(dots), where=denom != 0.0
-        )
-        cos[qids[:, None] == nids[None, :]] = -np.inf
-        kk = min(k, len(nids))
-        rows_q, rows_n, rows_c = [], [], []
-        for i in range(len(qids)):
-            order = np.lexsort((nids, -cos[i]))[:kk]
-            order = order[np.isfinite(cos[i][order])]
-            rows_q.extend([qids[i]] * len(order))
-            rows_n.extend(nids[order])
-            rows_c.extend(cos[i][order])
-        return pd.DataFrame({"qid": rows_q, "nid": rows_n, "cosine": rows_c})
 
     scored = (
         qside.groupBy("__tbl", "__bkt")
         .cogroup(index.groupBy("__tbl", "__bkt"))
-        .applyInPandas(score_block, schema=out_schema)
+        .applyInArrow(score_block, schema=out_schema)
         .distinct()  # cross-block duplicates carry identical cosines
     )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cosine", "rnk")
-    )
+    return global_topk(scored, k)
 
 
 def lsh_sqdist_join(
@@ -591,10 +413,7 @@ def lsh_sqdist_join(
                 if n == 0:
                     continue
                 ids, vecs = b.column(0), b.column(1)
-                v = _vector_block(vecs, dim)
-                acc = np.zeros((n, n_tables), dtype=np.float64)
-                for i in range(dim):
-                    acc += v[:, i, None] * planes_arr[None, :, i]
+                acc = _folded_dot_block(_vector_block(vecs, dim), planes_arr)
                 bkt = np.floor(acc / bucket_length).astype(np.int64)
                 for t in range(n_tables):
                     yield pa.RecordBatch.from_arrays(
@@ -624,14 +443,6 @@ def lsh_sqdist_join(
     )
     ba = buckets(la, "id_a")
 
-    def pair_table(ids_a, ids_b, ia, ib, d2) -> pa.Table:
-        # take() keeps the ids' own Arrow type (int, string, ...) —
-        # also for the empty result
-        return pa.Table.from_arrays(
-            [ids_a.take(ia), ids_b.take(ib), pa.array(d2[ia, ib])],
-            schema=out_arrow,
-        )
-
     if self_mode:
 
         def score_self(tbl: pa.Table) -> pa.Table:
@@ -642,7 +453,7 @@ def lsh_sqdist_join(
             idn = ids.to_numpy()
             d2 = _folded_sqdist_block(v, v)
             ia, ib = np.nonzero((idn[:, None] < idn[None, :]) & (d2 <= threshold))
-            return pair_table(ids, ids, ia, ib, d2)
+            return pair_table(out_arrow, ids, ia, ids, ib, d2[ia, ib])
 
         scored = ba.groupBy("__tbl", "__bkt").applyInArrow(
             score_self, schema=out_schema
@@ -656,9 +467,7 @@ def lsh_sqdist_join(
             "id_b",
         )
         if bucket_cap is not None:
-            from pyspark.sql.window import Window as _W
-
-            wb = _W.partitionBy("__tbl", "__bkt").orderBy("id_b")
+            wb = Window.partitionBy("__tbl", "__bkt").orderBy("id_b")
             rb = (
                 rb.withColumn("__brn", F.row_number().over(wb))
                 .filter(F.col("__brn") <= bucket_cap)
@@ -672,7 +481,9 @@ def lsh_sqdist_join(
                 _vector_block(a.column("__v"), dim), _vector_block(b.column("__v"), dim)
             )
             ia, ib = np.nonzero(d2 <= threshold)
-            return pair_table(a.column("id_a"), b.column("id_b"), ia, ib, d2)
+            return pair_table(
+                out_arrow, a.column("id_a"), ia, b.column("id_b"), ib, d2[ia, ib]
+            )
 
         scored = (
             ba.groupBy("__tbl", "__bkt")

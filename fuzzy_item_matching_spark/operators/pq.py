@@ -13,11 +13,11 @@ no per-pair floating math at all.
 Plan-size lesson (measured): embedding the m*ksub codebook as
 literal expression trees — either as HOF lambdas per entry or fully
 unrolled scalar chains — made ANALYSIS/codegen the bottleneck (10-20s
-scale-independent). The codebook is DATA, so it ships as a broadcast
-DataFrame and assignment is one tiny sqdist expression over an
-exploded (vector, subspace) x (subspace, entry) join; the ADC lookup
-table is computed driver-side in plain Python floats (IEEE doubles,
-left-associated exactly like the SQL list_sum fold — bit-equal) for
+scale-independent). The codebook is DATA, so it rides the task
+closure and assignment is one folded numpy pass per Arrow batch
+(``pq_code_rows``, ``mapInArrow``); the ADC lookup table is computed
+driver-side in plain Python floats (IEEE doubles, left-associated
+exactly like the SQL list_sum fold — bit-equal) for
 the broadcast-small query batch only.
 
 Determinism/oracle story: codebooks are the ``ksub`` lowest-id
@@ -28,21 +28,27 @@ subspaces accumulates as DECIMAL(38,18) — so codes AND scores are
 bit-identical across engines and the whole index is exactly
 DuckDB-replicable.
 
-At 100 TB: the codebook broadcast is KBs; code assignment is
-m rows/vector against a 128-row build side — linear, shuffled once to
-collapse the argmin; the PQ-coded corpus is what an IVF cell list
-would store, cutting candidate-scan memory 32x. Production pairs this
-with the IVF coarse partitioner (`ivf_cosine_topk`); the query
-surface verifies ADC against a bounded broadcast query batch so the
-quantizer itself is the thing under test.
+At 100 TB: the codebook is KBs; code assignment is map-only and
+linear, m code rows per vector; the PQ-coded corpus is what an IVF
+cell list would store, cutting candidate-scan memory 32x. Production
+pairs this with the IVF coarse partitioner (`ivf_cosine_topk`); the
+query surface verifies ADC against a bounded broadcast query batch so
+the quantizer itself is the thing under test.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from fuzzy_item_matching_spark.functions.vector import squared_dist
+from fuzzy_item_matching_spark.operators.blocks import (
+    _folded_sqdist_block,
+    _vector_block,
+    valid_vectors,
+)
 
 
 def pq_codebooks(
@@ -88,14 +94,7 @@ def pq_code_rows(
     ksub-row broadcast join × struct-min aggregate — the groupBy's
     (id, m) Exchange is GONE; code assignment is map-only at any
     corpus size, emitting exactly the m code rows per vector."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from fuzzy_item_matching_spark.operators.lsh import valid_vectors
-
     m = len(codebooks)
-    ksub = len(codebooks[0])
     dsub = len(codebooks[0][0])
     cb = np.asarray(codebooks, dtype=np.float64)  # (m, ksub, dsub)
     src = valid_vectors(df, vec_col, m * dsub).select(
@@ -111,29 +110,26 @@ def pq_code_rows(
     )
 
     def assign_codes(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
                 continue
-            v = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            n = len(v)
+            v = _vector_block(b.column(1), m * dsub)
             codes = np.empty((n, m), dtype=np.int32)
             for mi in range(m):
-                sub = v[:, mi * dsub : (mi + 1) * dsub]
-                acc = np.zeros((n, ksub), dtype=np.float64)
-                for d in range(dsub):
-                    diff = sub[:, d, None] - cb[mi, None, :, d]
-                    acc += diff * diff
+                acc = _folded_sqdist_block(v[:, mi * dsub : (mi + 1) * dsub], cb[mi])
                 np.copyto(acc, np.inf, where=np.isnan(acc))
                 codes[:, mi] = np.argmin(acc, axis=1)
-            yield pd.DataFrame(
-                {
-                    "__id": np.repeat(pdf["__id"].to_numpy(), m),
-                    "m": np.tile(np.arange(m, dtype=np.int32), n),
-                    "code": codes.reshape(-1),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(0).take(np.repeat(np.arange(n), m)),
+                    pa.array(np.tile(np.arange(m, dtype=np.int32), n)),
+                    pa.array(codes.reshape(-1)),
+                ],
+                names=["__id", "m", "code"],
             )
 
-    return src.mapInPandas(assign_codes, schema=schema)
+    return src.mapInArrow(assign_codes, schema=schema)
 
 
 def adc_lut_py(

@@ -433,19 +433,26 @@ def blocked_pair_stats(
     accumulated numpy kernel — the identical left-to-right IEEE fold as
     the engine's `F.aggregate` expressions and DuckDB's `list_sum`, so
     results stay bitwise oracle-exact (interpreted per-pair HOF folds
-    measured ~2.5× slower at sf0.1; see operators/lsh.py for the same
-    trade on LSH candidates).
+    measured ~2.5× slower at sf0.1; operators/blocks.py holds the shared
+    kernels of this trade).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from fuzzy_item_matching_spark.operators.lsh import (
+    from fuzzy_item_matching_spark.operators.blocks import (
         _folded_dot_block,
         _folded_dot_block_diag,
         _folded_sqdist_block,
+        _infer_dim,
+        _vector_block,
+        id_ranks,
+        pair_table,
+        valid_vectors,
     )
 
+    dim = _infer_dim(df, vec_col)
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [
@@ -456,42 +463,38 @@ def blocked_pair_stats(
             T.StructField("cosine", T.DoubleType()),
         ]
     )
+    out_arrow = to_arrow_schema(out_schema)
 
-    def score_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"id_a": pdf["__id"][:0], "id_b": pdf["__id"][:0],
-                 "dp": pd.Series(dtype="float64"),
-                 "sqdist": pd.Series(dtype="float64"),
-                 "cosine": pd.Series(dtype="float64")}
-            )
-        ids = pdf["__id"].to_numpy()
-        v = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
+    def score_block(tbl: pa.Table) -> pa.Table:
+        if tbl.num_rows < 2:
+            return out_arrow.empty_table()
+        ids = tbl.column("__id")
+        v = _vector_block(tbl.column("__vec"), dim)
         dp = _folded_dot_block(v, v)
         sq = _folded_sqdist_block(v, v)
         nrm = np.sqrt(_folded_dot_block_diag(v))
-        ia, ib = np.where(ids[:, None] < ids[None, :])
+        (rank,) = id_ranks(ids)
+        ia, ib = np.nonzero(rank[:, None] < rank[None, :])
         nn = nrm[ia] * nrm[ib]
         d = dp[ia, ib]
         cos = np.where(nn == 0.0, 0.0, d / np.where(nn == 0.0, 1.0, nn))
-        return pd.DataFrame(
-            {"id_a": ids[ia], "id_b": ids[ib], "dp": d,
-             "sqdist": sq[ia, ib], "cosine": cos}
-        )
+        return pair_table(out_arrow, ids, ia, ids, ib, d, sq[ia, ib], cos)
 
     return (
-        df.select(
+        # the flat reshape needs every vector non-NULL and dim long: a
+        # NULL or ragged vector costs its own row, not the job
+        valid_vectors(df, vec_col, dim)
+        .select(
             F.col(block_col).alias("__blk"),
             F.col(id_col).alias("__id"),
             F.col(vec_col).cast("array<double>").alias("__vec"),
         )
-        # Equi-join semantics: NULL block keys never match (and a NULL
-        # or missing vector has no defined stats) — filter both, rather
-        # than letting groupBy collect all NULLs into one spurious
-        # block or np.stack crash on ragged input.
-        .filter(F.col("__blk").isNotNull() & F.col("__vec").isNotNull())
+        # Equi-join semantics: NULL block keys never match — filter
+        # them, rather than letting groupBy collect all NULLs into one
+        # spurious block.
+        .filter(F.col("__blk").isNotNull())
         .groupBy("__blk")
-        .applyInPandas(score_block, schema=out_schema)
+        .applyInArrow(score_block, schema=out_schema)
     )
 
 

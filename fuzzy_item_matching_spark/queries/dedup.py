@@ -536,7 +536,7 @@ def _sem_centroids(
         refine_centroids,
         sample_centroids,
     )
-    from fuzzy_item_matching_spark.operators.lsh import _infer_dim, valid_vectors
+    from fuzzy_item_matching_spark.operators.blocks import _infer_dim, valid_vectors
 
     key = (sf_dir, n_centroids, iters)
     if key not in _SEM_CENTROIDS_MEMO:
@@ -759,7 +759,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_cells,
         ivf_cell_pairs,
     )
-    from fuzzy_item_matching_spark.operators.lsh import _infer_dim, valid_vectors
+    from fuzzy_item_matching_spark.operators.blocks import _infer_dim, valid_vectors
 
     e = load_table(spark, sf_dir, "embeddings")
     cents = _sem_centroids(spark, sf_dir)

@@ -653,7 +653,7 @@ def sim_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_codebooks,
     )
 
-    from fuzzy_item_matching_spark.operators.lsh import valid_vectors
+    from fuzzy_item_matching_spark.operators.blocks import valid_vectors
 
     e = load_table(spark, sf_dir, "embeddings")
     # one bad (NULL/ragged) vector must cost one row, not the query:
@@ -860,7 +860,7 @@ def sim_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_codebooks,
     )
 
-    from fuzzy_item_matching_spark.operators.lsh import valid_vectors
+    from fuzzy_item_matching_spark.operators.blocks import valid_vectors
 
     from fuzzy_item_matching_spark.functions.vector import l2_normalize
 
@@ -1380,7 +1380,7 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from fuzzy_item_matching_spark.functions.vector import cosine_similarity
-    from fuzzy_item_matching_spark.operators.lsh import (
+    from fuzzy_item_matching_spark.operators.blocks import (
         _infer_dim,
         valid_vectors,
     )

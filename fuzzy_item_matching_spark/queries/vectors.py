@@ -388,7 +388,7 @@ def _gram_long_partials(e) -> "DataFrame":
     import numpy as np
     import pyarrow as pa
 
-    from fuzzy_item_matching_spark.operators.lsh import valid_vectors
+    from fuzzy_item_matching_spark.operators.blocks import valid_vectors
 
     q = _PCA_Q
 
@@ -813,6 +813,8 @@ def vec_arrow_map_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
+    from fuzzy_item_matching_spark.operators.blocks import _folded_dot_block_diag
+
     def kernel(batches):
         for b in batches:
             ids = b.column(0)
@@ -830,11 +832,7 @@ def vec_arrow_map_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = la.flatten().to_numpy(zero_copy_only=False).astype(
                 np.float64
             )
-            m = flat.reshape(n, dim)
-            acc = None
-            for j in range(dim):
-                t = m[:, j] * m[:, j]
-                acc = t if acc is None else acc + t
+            acc = _folded_dot_block_diag(flat.reshape(n, dim))
             yield pa.RecordBatch.from_arrays(
                 [
                     ids,

@@ -85,7 +85,9 @@ def main() -> None:
             r"BroadcastNestedLoopJoin|CartesianProduct)\b", plan_txt or "")))
         py = sorted(set(re.findall(
             r"\b(BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|"
-            r"FlatMapGroupsInPandas)\b", plan_txt or "")))
+            r"FlatMapGroupsInPandas|FlatMapGroupsInArrow|"
+            r"FlatMapCoGroupsInPandas|FlatMapCoGroupsInArrow)\b",
+            plan_txt or "")))
         good = [t for t in ts if t == t]
         if not good:  # first pass failed: keep the failure message visible
             continue

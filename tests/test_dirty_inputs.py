@@ -106,6 +106,9 @@ DIRTY_SAFE = [
     "sim_ann_pq_topk",
     "sim_ann_ivfpq_topk",
     "sim_lsh_sqdist_pairs",
+    # label-block pair stats: valid_vectors drops the NULL and ragged
+    # vectors before the flat-buffer block kernel
+    "vec_label_pair_stats",
     # MMR: NULL/ragged vectors drop via valid_vectors; a NaN rel would
     # sort FIRST under DESC in both engines, so the pool filter
     # ~isnan(rel) keeps one bad row costing one row
@@ -233,7 +236,7 @@ def test_arrow_norms_ragged_raises_prefiltered_survives(spark, dirty_sf):
     """vec_arrow_map_norms' documented dirty-input contract: a ragged
     batch raises the labeled ValueError; with the production
     pre-filter (valid_vectors) the clean corpus computes normally."""
-    from fuzzy_item_matching_spark.operators.lsh import (
+    from fuzzy_item_matching_spark.operators.blocks import (
         _infer_dim,
         valid_vectors,
     )

@@ -19,8 +19,8 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from fuzzy_item_matching_spark.operators.blocks import _vector_block
 from fuzzy_item_matching_spark.operators.lsh import (
-    _vector_block,
     lsh_sqdist_join,
     random_hyperplanes,
 )

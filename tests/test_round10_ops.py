@@ -96,6 +96,25 @@ def test_star_cc_raises_without_fixpoint(spark):
     assert labels == {i: 0 for i in range(21)}
 
 
+def test_label_cc_raises_without_fixpoint(spark):
+    """connected_components (min-label propagation) has the same
+    contract as the star twin: exhausting max_iter before the labels
+    stop moving must raise, never return non-minimum labels."""
+    from fuzzy_item_matching_spark.operators.dedup import connected_components
+
+    # a 6-node path: labels move one hop per round
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(edges, max_iter=2)
+    labels = {
+        r.node: r.component
+        for r in connected_components(edges, max_iter=25).collect()
+    }
+    assert labels == {i: 0 for i in range(6)}
+
+
 def test_tpe_lite_gamma_clamp(spark):
     """gamma large enough that ceil(gamma*n) == n must not produce a
     zero-size bad set (NaN/inf acquisition); the draw clamps to
